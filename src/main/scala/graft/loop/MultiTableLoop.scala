@@ -3,8 +3,8 @@ package graft.loop
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.applyops.{ApplyPlanner, TableSpec}
-import graft.feed.{Changefeed, Envelopes}
+import graft.applyops.TableSpec
+import graft.feed.Envelopes
 import graft.model.Hlc
 import graft.stage.StagedStore
 import graft.table.SnapshotTable
@@ -24,13 +24,14 @@ final case class TableTarget(
   * one transaction (reference: internal/source/cdc/webhook.go:117-164), the
   * resolver drains tables level-by-level per `SchemaData.Order`
   * (resolver.go:375-386). Here one `foreachBatch` is the transaction; FK
-  * levels are applied as sequential merges (parallel within a level would
-  * also be safe — tables in a level are independent — kept sequential for
-  * deterministic commit versions).
+  * levels apply one after another, and the tables WITHIN a level merge
+  * concurrently (they are independent), so commit order across a level's
+  * tables is not fixed.
   *
-  * Each table keeps its own staging store and snapshot table; the fence is
-  * global (webhook resolved markers cover every topic, like the reference's
-  * per-schema resolved timestamps).
+  * Each topic's apply is a [[FenceApply]] — the same fence step
+  * [[ReplayLoop]] runs — over its own staging store and snapshot table; the
+  * fence is global (webhook resolved markers cover every topic, like the
+  * reference's per-schema resolved timestamps).
   */
 final class MultiTableLoop(
     spark: SparkSession,
@@ -92,16 +93,14 @@ final class MultiTableLoop(
   private val levelOrder: Seq[Seq[String]] =
     FkLevels.levels(targets.keys.toSeq.sorted, dependsOn)
 
+  private val appliers: Map[String, FenceApply] = targets.map { case (topic, t) =>
+    topic -> new FenceApply(
+      spark, t.table, t.stage, t.spec, saltBuckets,
+      changelogDir.map(d => s"$d/$topic"), vacuumKeepVersions, s"fan topic=$topic")
+  }
+
   def committedFence: Hlc =
-    targets.values
-      .map(t =>
-        t.table.log
-          .latest()
-          .map(m => Hlc(m.resolvedNanos, m.resolvedLogical))
-          .getOrElse(Hlc.Zero)
-      )
-      .minOption
-      .getOrElse(Hlc.Zero)
+    appliers.values.map(_.fence).minOption.getOrElse(Hlc.Zero)
 
   /** Topics that still hold staged data in partitions beyond their committed
     * fence — the startup-discovery analog of the reference's pending-schema
@@ -110,54 +109,19 @@ final class MultiTableLoop(
     */
   def pendingTopics(): Seq[String] =
     targets.toSeq
-      .filter { case (_, t) =>
-        val fence = t.table.log
-          .latest()
-          .map(m => Hlc(m.resolvedNanos, m.resolvedLogical))
-          .getOrElse(Hlc.Zero)
+      .filter { case (topic, t) =>
         t.stage
           .maxStagedBucket()
-          .exists(_ > t.stage.bucketOfNanos(fence.nanos))
+          .exists(_ > t.stage.bucketOfNanos(appliers(topic).fence.nanos))
       }
       .map(_._1)
       .sorted
 
   def processBatch(linesRaw: DataFrame, batchId: Long): Unit = {
-    // NOT cached: the one-pass multi-topic staging reads the batch once and
-    // the resolved scan re-reads only "resolved"-bearing lines — re-scanning
-    // text beats building a columnar cache (see ReplayLoop.processBatch)
-    processBatchCached(
-      linesRaw.select(col("value"), input_file_name().as(Changefeed.SRC_FILE)),
-      batchId
-    )
-  }
-
-  private def processBatchCached(lines: DataFrame, batchId: Long): Unit = {
-    val parsed = parse(lines)
-    val muts = parsed.filter(!col(Changefeed.RESOLVED))
-
-    // batch identity = source-file-set hash, not the engine batch id: a
-    // wiped checkpoint renumbers batches from 0, and an id-keyed marker
-    // would wrongly skip a NEW batch reusing an old id (see ReplayLoop)
-    val files = ReplayLoop.distinctFiles(lines)
-    val stageKey =
-      if (files.isEmpty) batchId else ReplayLoop.batchKeyOf(files)
-
-    // cheap second scan; every supported envelope spells its marker with a
-    // "resolved" key, so the substring prefilter holds for any codec
-    val resolvedRows = parse(lines.filter(col("value").contains("\"resolved\"")))
-      .filter(col(Changefeed.RESOLVED))
-      .agg(max(struct(col("nanos"), col("logical"))).as("m"))
-      .collect()
-    val newResolved: Option[Hlc] =
-      if (resolvedRows.isEmpty || resolvedRows(0).isNullAt(0)) None
-      else {
-        val r = resolvedRows(0).getStruct(0)
-        Some(Hlc(r.getLong(0), r.getInt(1)))
-      }
+    val batch = FenceApply.intake(linesRaw, batchId, parse)
 
     if (immediate) {
-      applyImmediate(muts, stageKey, batchId, newResolved)
+      applyImmediate(batch, batchId)
       return
     }
 
@@ -165,8 +129,8 @@ final class MultiTableLoop(
     // partitionBy(topic, ts_bucket) + a single per-topic drift aggregation
     // replaces the T-pass per-topic append loop
     StagedStore.appendMultiTopic(
-      muts.select("topic", "key", "data", "nanos", "logical", "src_file"),
-      stageKey,
+      batch.muts.select("topic", "key", "data", "nanos", "logical", "src_file"),
+      batch.stageKey,
       stores = targets.map { case (topic, t) => topic -> t.stage },
       // PK-less topics synthesize a rowid at plan time — no key-arity /
       // PK-presence validation while staging
@@ -177,126 +141,50 @@ final class MultiTableLoop(
       }
     )
 
-    newResolved.foreach { target =>
-      // FK order: parents before children, level by level; tables WITHIN a
-      // level are independent, so their merges run concurrently (each is
-      // its own Spark job chain — the scheduler interleaves them, which
-      // keeps the cluster busy when a level has many small tables, the
-      // reference's fan-shards analog, fan_workers.go:136-194)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      levelOrder.foreach { level =>
-        val merges = level.map { topic =>
-          Future {
-            val t = targets(topic)
-            val fence = t.table.log
-              .latest()
-              .map(m => Hlc(m.resolvedNanos, m.resolvedLogical))
-              .getOrElse(Hlc.Zero)
-            if (target > fence) {
-              // bounded window + late-delivery branch, as in ReplayLoop:
-              // (fence, target] plus anything staged since the last merge
-              val mergedThroughSeq: Long = t.table.log
-                .latest()
-                .flatMap(_.metric("merged_through_seq"))
-                .getOrElse(0L)
-              val seqNow = t.stage.currentSeq()
-              val window =
-                t.stage.selectWindow(fence, target, Some(mergedThroughSeq))
-              // per-table apply config (CAS, deadlines, exprs) applies on
-              // the fan path exactly as on the single-table path — the
-              // reference's per-Applier config is shared by serial and fan
-              // events (internal/target/apply/apply.go:148-191)
-              val planned = ApplyPlanner.plan(
-                spark, t.spec, window, saltBuckets,
-                dedup = t.spec.config.casColumns.nonEmpty,
-                observedFields = Some(t.stage.observedFields().toSeq))
-              var lostRace = false
-              try {
-                val (gated, casCleanup) = ApplyPlanner.casGate(
-                  t.table, planned.batch, planned.pkCols, t.spec.config.casColumns)
-                t.table.merge(
-                  gated,
-                  planned.pkCols,
-                  idempotenceKey = s"fence-${target.format}",
-                  resolved = target,
-                  lineage = Seq(s"batch=$batchId", s"topic=$topic"),
-                  extraMetrics = Map("merged_through_seq" -> seqNow)
-                )
-                casCleanup()
-              } catch {
-                // same optimistic-concurrency loser path as ReplayLoop's
-                // mergeToFence: a competing applier retired this topic's
-                // staged files mid-read AND its commit covers our target —
-                // the commit log would have no-op'd us anyway. Only the
-                // merge read/apply phase is guarded (see ReplayLoop): on
-                // the winning path the housekeeping below runs OUTSIDE the
-                // guard so its failures propagate instead of masquerading
-                // as this no-op; a lost race skips it (the winner owns that
-                // fence's retire/vacuum).
-                case e: Throwable
-                    if ReplayLoop.isMissingFileRead(e) && {
-                      val now = t.table.log
-                        .latest()
-                        .map(m => Hlc(m.resolvedNanos, m.resolvedLogical))
-                        .getOrElse(Hlc.Zero)
-                      now >= target
-                    } =>
-                  lostRace = true
-                  println(
-                    s"[graft][fan] topic=$topic fence ${target.format} " +
-                      "already applied by a concurrent writer; no-op"
-                  )
-              }
-              if (!lostRace) {
-                // changelog BEFORE vacuum: segments diff against the
-                // previous version's manifest, which vacuum may retire
-                changelogDir.foreach(d => t.table.emitChangelog(s"$d/$topic"))
-                t.stage.retire(target)
-                // bound version growth exactly as ReplayLoop does: at
-                // streaming cadence every fence commits a new version per
-                // table, so the fan path needs the same vacuum or storage
-                // (and the gcHorizon back-walk) grows without bound
-                vacuumKeepVersions.foreach(t.table.vacuum(_))
-              }
-            }
-          }
-        }
-        // barrier between levels: children must see committed parents
-        merges.foreach(f => Await.result(f, Duration.Inf))
+    batch.resolved.foreach { target =>
+      inFkOrder { topic =>
+        appliers(topic).toFence(target, batchId, Seq(s"batch=$batchId", s"topic=$topic"))
       }
     }
   }
 
-  /** Immediate (fan) application of one micro-batch: per-topic slices are
-    * planned and merged directly, parents-before-children, with NO staging
-    * and NO fence gate. Idempotence key = the file-set key (scoped per
-    * table by its own commit log), so a redelivered batch no-ops per table
-    * exactly as in ReplayLoop's immediate mode. Topics within a level
-    * merge concurrently. Per-topic slicing is re-scan below
-    * [[immediateSplitThreshold]] targets and a one-pass partitioned split
-    * at or above it (see the knob's doc).
+  /** Run `apply` for every topic in FK order: parents before children,
+    * level by level. Tables WITHIN a level are independent, so their applies
+    * run concurrently (each is its own Spark job chain — the scheduler
+    * interleaves them, which keeps the cluster busy when a level has many
+    * small tables, the reference's fan-shards analog,
+    * fan_workers.go:136-194).
     */
-  private def applyImmediate(
-      muts: DataFrame,
-      stageKey: Long,
-      batchId: Long,
-      newResolved: Option[Hlc]
-  ): Unit = {
+  private def inFkOrder(apply: String => Unit): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    levelOrder.foreach { level =>
+      val applies = level.map(topic => Future(apply(topic)))
+      // barrier between levels: children must see committed parents
+      applies.foreach(f => Await.result(f, Duration.Inf))
+    }
+  }
+
+  /** Immediate (fan) application of one micro-batch: per-topic slices go
+    * through [[FenceApply.immediate]] in FK order, with NO staging and NO
+    * fence gate. Idempotence key = the file-set key (scoped per table by its
+    * own commit log), so a redelivered batch no-ops per table exactly as in
+    * ReplayLoop's immediate mode. Per-topic slicing is re-scan below
+    * [[immediateSplitThreshold]] targets and a one-pass partitioned split
+    * at or above it (see the knob's doc).
+    */
+  private def applyImmediate(batch: FenceApply.Batch, batchId: Long): Unit = {
     val sliceCols = Seq("key", "data", "nanos", "logical", "src_file")
     val splitDir: Option[String] =
       if (targets.size < immediateSplitThreshold) None
       else {
-        val dir = s"$checkpointDir/imm-split-$stageKey"
+        val dir = s"$checkpointDir/imm-split-${batch.stageKey}"
         // ONE job parses the whole batch and writes per-topic partitions
         // (idempotent: overwrite — a redelivered batch rewrites the same
         // scratch); every subsequent per-topic read prunes to its own
         // partition instead of re-parsing the batch
-        muts
+        batch.muts
           .select((Seq("topic") ++ sliceCols).map(col): _*)
           .write
           .mode("overwrite")
@@ -304,54 +192,19 @@ final class MultiTableLoop(
           .parquet(dir)
         Some(dir)
       }
-    def slice(topic: String): DataFrame = splitDir match {
-      case None =>
-        muts.filter(col("topic") === topic).select(sliceCols.map(col): _*)
+    def slice(topic: String): DataFrame = (splitDir match {
+      case None => batch.muts
       case Some(dir) =>
         // explicit schema: an all-marker batch writes no partitions, and
         // schemaless parquet reads of an empty scratch cannot infer
         spark.read
-          .schema(
-            org.apache.spark.sql.types.StructType(
-              Seq(
-                org.apache.spark.sql.types.StructField("key", org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("data", org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("nanos", org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("logical", org.apache.spark.sql.types.IntegerType),
-                org.apache.spark.sql.types.StructField("src_file", org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("topic", org.apache.spark.sql.types.StringType)
-              )
-            )
-          )
+          .schema("key STRING, data STRING, nanos BIGINT, logical INT, src_file STRING, topic STRING")
           .parquet(dir)
-          .filter(col("topic") === topic)
-          .select(sliceCols.map(col): _*)
-    }
-    levelOrder.foreach { level =>
-      val merges = level.map { topic =>
-        Future {
-          val t = targets(topic)
-          val planned = ApplyPlanner.plan(
-            spark, t.spec, slice(topic), saltBuckets,
-            dedup = t.spec.config.casColumns.nonEmpty)
-          val (gated, casCleanup) = ApplyPlanner.casGate(
-            t.table, planned.batch, planned.pkCols, t.spec.config.casColumns)
-          t.table.merge(
-            gated,
-            planned.pkCols,
-            idempotenceKey = s"batch-$stageKey",
-            // no fence gating, but resolved markers are still RECORDED on
-            // the commits they ride with (resolver.go:291-309)
-            resolved = newResolved.getOrElse(Hlc.Zero),
-            lineage = Seq(s"batch=$batchId", s"topic=$topic", "mode=immediate")
-          )
-          casCleanup()
-          changelogDir.foreach(d => t.table.emitChangelog(s"$d/$topic"))
-          vacuumKeepVersions.foreach(t.table.vacuum(_))
-        }
-      }
-      // barrier between levels: children must see committed parents
-      merges.foreach(f => Await.result(f, Duration.Inf))
+    }).filter(col("topic") === topic).select(sliceCols.map(col): _*)
+    inFkOrder { topic =>
+      appliers(topic).immediate(
+        slice(topic), batch.stageKey, batch.resolved,
+        Seq(s"batch=$batchId", s"topic=$topic", "mode=immediate"))
     }
     // reclaim the split scratch once every topic has merged
     splitDir.foreach(d => graft.util.Dirs.deleteRecursively(java.nio.file.Paths.get(d)))

@@ -1,9 +1,8 @@
 package graft.loop
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.applyops.{ApplyPlanner, TableSpec}
+import graft.applyops.TableSpec
 import graft.feed.Changefeed
 import graft.model.Hlc
 import graft.stage.StagedStore
@@ -34,9 +33,14 @@ import graft.table.SnapshotTable
   *      no-op;
   *   5. retire staging partitions below the fence (metadata-only drop).
   *
+  * Steps 4-5, the changelog and the vacuum are [[FenceApply.toFence]], the
+  * same step [[MultiTableLoop]] runs per topic.
+  *
   * Immediate mode (`--immediate` in the reference,
   * internal/source/logical/config.go:73-75) skips staging and fencing and
-  * merges each micro-batch directly with idempotence key = batch id.
+  * merges each micro-batch directly with idempotence key = the batch's
+  * file-set key ([[FenceApply.immediate]]); changelog and vacuum follow
+  * every commit as in staged mode.
   *
   * Exactly-once: Spark's checkpoint makes file delivery at-least-once per
   * batch id; the staging append markers, the read-side dedup, and the
@@ -164,138 +168,52 @@ final class ReplayLoop(
       )
     }
 
-  /** current spec: schema follows the table's committed schema */
-  private def currentSpec: TableSpec = {
-    table.payloadSchema() match {
-      case Some(s) =>
-        // the committed schema may include the extras column; keep declared
-        // config but adopt evolved column set/types
-        initialSpec.copy(payloadSchema =
-          org.apache.spark.sql.types.StructType(
-            s.fields.filterNot(f => initialSpec.config.extras.contains(f.name))
-          )
-        )
-      case None => initialSpec
-    }
-  }
+  private val applier = new FenceApply(
+    spark, table, stage, initialSpec, saltBuckets, changelogDir, vacuumKeepVersions, "replay")
 
-  def committedFence: Hlc =
-    table.log.latest().map(m => Hlc(m.resolvedNanos, m.resolvedLogical)).getOrElse(Hlc.Zero)
-
-  @inline private def timed[T](what: String, batchId: Long)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    // driver-side phase metric (a few lines per micro-batch); stdout so it
-    // survives setLogLevel(WARN) — the lightweight analog of the
-    // reference's stage/apply Prometheus timers (apply/metrics.go:27-48)
-    println(s"[graft-loop] batch=$batchId $what ${(System.nanoTime() - t0) / 1000000} ms")
-    r
-  }
+  def committedFence: Hlc = applier.fence
 
   /** Process one micro-batch of raw ndjson lines. Public for batch-mode
     * replay and tests; the streaming query calls this via foreachBatch.
     */
   def processBatch(linesRaw: DataFrame, batchId: Long): Unit = {
-    // NOT cached: the batch feeds three passes (staging append, resolved
-    // scan, lineage), but re-scanning raw text from the page cache with the
-    // single-from_json parse is measurably cheaper than building a
-    // multi-GB columnar cache of the lines (which also made 32 concurrent
-    // cache-builder tasks the peak-heap hotspot). input_file_name() is
-    // captured per-scan, so every pass sees the same file column.
-    processBatchCached(
-      linesRaw.select(col("value"), input_file_name().as(Changefeed.SRC_FILE)),
-      batchId
-    )
-  }
-
-  private def processBatchCached(lines: DataFrame, batchId: Long): Unit = {
-    val parsed = parse(lines)
-    val muts = parsed
-      .filter(!col(Changefeed.RESOLVED))
-      .select("key", "data", "nanos", "logical", "src_file")
-
-    // Identify this batch by its SOURCE FILE SET, not the engine's batch
-    // id: after a wiped checkpoint the file source renumbers batches from
-    // 0, and an id-keyed marker would wrongly skip a brand-new batch that
-    // happens to reuse an old id. The file-set hash is stable under
-    // renumbering AND still dedups true redeliveries of the same files.
-    val files = ReplayLoop.distinctFiles(lines)
-    // fall back to the engine batch id when the batch has no file
-    // provenance (in-memory DataFrames via the public processBatch):
-    // hashing an empty file set would collapse EVERY such batch onto one
-    // constant key and silently skip all but the first
-    val stageKey: Long =
-      if (files.isEmpty) batchId else ReplayLoop.batchKeyOf(files)
-    val lineage = s"batch=$batchId" +: files
-
-    // cheap second scan: only lines containing a resolved marker are parsed
-    // (every supported envelope spells its marker with a "resolved" key)
-    val resolvedRows = parse(
-      lines.filter(col("value").contains("\"resolved\""))
-    )
-      .filter(col(Changefeed.RESOLVED))
-      .agg(max(struct(col("nanos"), col("logical"))).as("m"))
-      .collect()
-    val newResolved: Option[Hlc] =
-      if (resolvedRows.isEmpty || resolvedRows(0).isNullAt(0)) None
-      else {
-        val r = resolvedRows(0).getStruct(0)
-        Some(Hlc(r.getLong(0), r.getInt(1)))
-      }
+    val batch = FenceApply.intake(linesRaw, batchId, parse)
+    val muts = batch.muts.select("key", "data", "nanos", "logical", "src_file")
+    val lineage = s"batch=$batchId" +: batch.files
 
     if (immediate) {
-      val spec = currentSpec
-      val planned = ApplyPlanner.plan(
-        spark, spec, muts, saltBuckets,
-        dedup = spec.config.casColumns.nonEmpty)
-      val (gated, casCleanup) =
-        ApplyPlanner.casGate(table, planned.batch, planned.pkCols, spec.config.casColumns)
-      table.merge(
-        batch = gated,
-        pkCols = planned.pkCols,
-        // file-set key, not batch id: survives checkpoint-wipe renumbering
-        idempotenceKey = s"batch-$stageKey",
-        // immediate mode has no fence gating, but resolved markers are
-        // still RECORDED on the commit they ride with — the ledger shows
-        // source progress, mirroring the reference's Record-without-fencing
-        // (internal/source/cdc/resolver.go:291-309)
-        resolved = newResolved.getOrElse(Hlc.Zero),
-        lineage = lineage
-      )
-      casCleanup()
+      applier.immediate(muts, batch.stageKey, batch.resolved, lineage)
       return
     }
 
-    val specForStage = currentSpec
-    val pkSrc = specForStage.pkCols
-      .map(c => specForStage.config.sourceNames.getOrElse(c, c))
-    timed("stage-append", batchId) {
+    val pkSrc = initialSpec.pkCols
+      .map(c => initialSpec.config.sourceNames.getOrElse(c, c))
+    FenceApply.timed("stage-append", batchId) {
       // drift summary (arity / field set / PK presence) rides this write;
       // violations fail the batch here, fields land in the field-set file.
       // A PK-less spec synthesizes its rowid at plan time, so key-arity /
       // PK-presence validation does not apply while staging.
       stage.append(
         muts,
-        stageKey,
+        batch.stageKey,
         validatePk =
-          if (specForStage.pkCols.isEmpty) None
-          else Some((specForStage.pkCols.size, pkSrc))
+          if (initialSpec.pkCols.isEmpty) None
+          else Some((initialSpec.pkCols.size, pkSrc))
       )
     }
 
     // advance the filename-marker gate: everything in this batch was
     // delivered, so the delivered-data high-water moves to the newest
     // mtime among this batch's files
-    if (resolvedFromFilenames && files.nonEmpty) {
+    if (resolvedFromFilenames && batch.files.nonEmpty) {
       advanceDeliveredHw(
-        files.flatMap(f => ReplayLoop.fileMtimeMillis(f).map(f -> _))
+        batch.files.flatMap(f => ReplayLoop.fileMtimeMillis(f).map(f -> _))
       )
     }
     val markerFence: Option[Hlc] =
       if (!resolvedFromFilenames) None else safeMarkerFence()
 
-    val fence = committedFence
-    (newResolved.toSeq ++ markerFence).maxOption.filter(_ > fence).foreach { target =>
+    (batch.resolved.toSeq ++ markerFence).maxOption.foreach { target =>
       mergeToFence(target, batchId, lineage)
     }
   }
@@ -339,91 +257,12 @@ final class ReplayLoop(
     * shared tail of a resolved event, whether it arrived in-stream, as a
     * `.RESOLVED` marker file, or from the post-catch-up drain.
     */
-  private def mergeToFence(target: Hlc, batchId: Long, lineage: Seq[String]): Unit = {
-    val fence = committedFence
-    // window = (prevFence, target] PLUS anything staged since the last
-    // merge regardless of ts: a mutation below an already-committed fence
-    // can still arrive late when the transport reorders deliveries (e.g.
-    // the file source orders by mtime) — it was staged AFTER the last
-    // merge, so the stage_seq branch picks it up exactly once. Rows
-    // already merged by earlier fences (ts <= fence, staged before the
-    // recorded seq) are no longer re-read and re-written every fence.
-    //
-    // raw (non-deduplicated) read: exact duplicates collapse in the
-    // merge's per-key max_by anyway, saving a shuffle. Not cached: with
-    // the staging-time summary, the window feeds exactly one consumer
-    // (the merge, which caches its own transformed batch).
-    val mergedThroughSeq: Long = table.log
-      .latest()
-      .flatMap(_.metric("merged_through_seq"))
-      .getOrElse(0L)
-    val seqNow = stage.currentSeq() // this batch's append already happened
-    val window =
-      stage.selectWindowRaw(fence, target, stagedAfterSeq = Some(mergedThroughSeq))
-    val spec = currentSpec
-    // pre-dedup only when a CAS gate needs one candidate per key; the
-    // merge's per-key max_by reduction is the LWW otherwise (saves two
-    // shuffles of the window)
-    val planned = timed("plan", batchId) {
-      ApplyPlanner.plan(
-        spark, spec, window, saltBuckets,
-        dedup = spec.config.casColumns.nonEmpty,
-        // field set was collected while staging: no summary scan here
-        observedFields = Some(stage.observedFields().toSeq))
-    }
-    var lostRace = false
-    try {
-      val (gated, casCleanup) =
-        ApplyPlanner.casGate(table, planned.batch, planned.pkCols, spec.config.casColumns)
-      timed(s"merge fence=${target.format}", batchId) {
-        table.merge(
-          batch = gated,
-          pkCols = planned.pkCols,
-          idempotenceKey = s"fence-${target.format}",
-          resolved = target,
-          lineage = lineage,
-          extraMetrics =
-            Map("merged_through_seq" -> seqNow) ++
-              (if (resolvedFromFilenames) Map("delivered_mtime_hw" -> deliveredMtimeHw)
-               else Map.empty)
-        )
-      }
-      casCleanup()
-    } catch {
-      // Optimistic-concurrency loser whose CONFLICT surfaced as a failed
-      // READ rather than a commit-log no-op: a competing applier (HA
-      // restart overlap — two drivers on one table) merged this window and
-      // RETIRED its staged files while our lazy scan was mid-flight. The
-      // competitor's commit proves every retired row was applied, so if
-      // the committed fence now covers our target this attempt is the
-      // same no-op the commit log would have made it — swallow and let the
-      // next batch proceed against the new head. Any read failure NOT
-      // explained by a covering commit is real data loss and re-raises.
-      //
-      // The catch wraps ONLY the merge read/apply phase: the housekeeping
-      // below used to sit inside it, so an emitChangelog/retire failure
-      // whose message happened to match the missing-file signature was
-      // silently swallowed as "already applied" — permanently skipping
-      // retire and vacuum (unbounded staging growth) with a misleading
-      // log line. On the winning path housekeeping now runs OUTSIDE the
-      // guard (its failures propagate); a lost race still skips it, as
-      // before — the winner owns that fence's retire/vacuum, and a loser
-      // retiring concurrently races the winner's staging bookkeeping.
-      case e: Throwable if ReplayLoop.isMissingFileRead(e) && committedFence >= target =>
-        lostRace = true
-        println(
-          s"[graft][replay] fence ${target.format} already applied by a " +
-            "concurrent writer (staged files retired mid-read); no-op"
-        )
-    }
-    if (!lostRace) {
-      // changelog BEFORE vacuum: the new segment diffs against the previous
-      // version's manifest, which vacuum may retire
-      changelogDir.foreach(table.emitChangelog)
-      stage.retire(target)
-      vacuumKeepVersions.foreach(table.vacuum(_))
-    }
-  }
+  private def mergeToFence(target: Hlc, batchId: Long, lineage: Seq[String]): Unit =
+    applier.toFence(
+      target, batchId, lineage,
+      extraMetrics =
+        if (resolvedFromFilenames) Map("delivered_mtime_hw" -> deliveredMtimeHw)
+        else Map.empty)
 
   /** Every regular file in the feed tree (depth 2 — top level plus chunk
     * subdirectories): (path, mtime millis, isMarker, parsed marker HLC).
@@ -464,7 +303,7 @@ final class ReplayLoop(
     * not have been delivered) still blocks markers newer than it.
     */
   def drainResolvedFilenameMarkers(): Unit = if (resolvedFromFilenames) {
-    safeMarkerFence().filter(_ > committedFence).foreach { target =>
+    safeMarkerFence().foreach { target =>
       mergeToFence(target, batchId = -1L, Seq("drain=resolved-markers"))
     }
   }
@@ -527,7 +366,6 @@ final class ReplayLoop(
       nowNanos: Long = System.currentTimeMillis() * 1000000L,
       trigger: Trigger = Trigger.ProcessingTime("1 second")
   ): (StreamingQuery, Boolean) = {
-    val fence = committedFence
     val stale = isLagging(backfillWindowNanos, nowNanos)
     if (stale) runAvailableNow()
     (start(trigger), stale)

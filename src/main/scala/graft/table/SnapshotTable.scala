@@ -330,12 +330,13 @@ final class SnapshotTable(
 
   private def readRawAt(
       metaOpt: Option[CommitMeta],
-      onlyBuckets: Option[Set[Int]]
+      onlyBuckets: Option[Set[Int]],
+      session: SparkSession = spark
   ): DataFrame = {
     metaOpt match {
       case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        session.createDataFrame(
+          session.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           withMeta(new StructType())
         )
       case Some(meta) =>
@@ -359,8 +360,8 @@ final class SnapshotTable(
             meta.bucketSchemas.getOrElse(b, meta.schemaDdl) -> rel
           } ++ chosenDeltas
         if (entries.isEmpty) {
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          session.createDataFrame(
+            session.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             target
           )
         } else {
@@ -369,7 +370,7 @@ final class SnapshotTable(
             .map { case (ddl, group) =>
               val fileSchema = withMeta(StructType.fromDDL(ddl))
               val paths = group.map { case (_, rel) => s"$root/$rel" }
-              val df = spark.read.schema(fileSchema).parquet(paths: _*)
+              val df = session.read.schema(fileSchema).parquet(paths: _*)
               alignTo(df, target)
             }
             .reduce(_.unionByName(_))
@@ -596,7 +597,7 @@ final class SnapshotTable(
       bucketed.unpersist()
       // empty batch: still record the fence advance as a metadata-only commit
       val version = prev.map(_.version + 1).getOrElse(1L)
-      val pf = prev.map(m => Hlc(m.resolvedNanos, m.resolvedLogical)).getOrElse(Hlc.Zero)
+      val pf = prev.map(_.fence).getOrElse(Hlc.Zero)
       val fo = if (resolved > pf) resolved else pf
       val meta = CommitMeta(
         version = version,
@@ -635,11 +636,13 @@ final class SnapshotTable(
     // delta merge reads nothing
     val current =
       if (deltaMode) None
-      else Some(alignTo(readRaw(Some(touched)), target))
+      // read in the BATCH's session: the union below then runs the write
+      // there, the one session whose listener completes the batch-side
+      // Observation (`dropped_late`) — a foreachBatch micro-batch lives in
+      // the streaming query's cloned session, not the table's
+      else Some(alignTo(readRawAt(log.latest(), Some(touched), batch.sparkSession), target))
 
-    val prevFence = prev
-      .map(m => Hlc(m.resolvedNanos, m.resolvedLogical))
-      .getOrElse(Hlc.Zero)
+    val prevFence = prev.map(_.fence).getOrElse(Hlc.Zero)
     // the fence never regresses (a replayed old window can merge — its rows
     // no-op against newer LWW state — but must not move the fence backward,
     // mirroring the reference's monotonic Mark, resolver.go:154-157)
@@ -659,8 +662,8 @@ final class SnapshotTable(
         var continue = true
         while (continue && v >= 1) {
           log.tryRead(v) match {
-            case Some(m) if Hlc(m.resolvedNanos, m.resolvedLogical) < prevFence =>
-              h = Hlc(m.resolvedNanos, m.resolvedLogical); continue = false
+            case Some(m) if m.fence < prevFence =>
+              h = m.fence; continue = false
             case Some(_) => v -= 1
             case None => continue = false // vacuumed past: keep tombstones
           }

@@ -171,6 +171,45 @@ class ChangelogEmitSpec extends SparkSpec {
     assert(after == before, "healed segment content diverged")
   }
 
+  test("immediate replay loop: changelog after every commit folds to state; vacuum bounds versions") {
+    val feedDir = tmpDir("climmfeed")
+    val base = tmpDir("climm")
+    val clDir = s"$base/changelog"
+    Generator.writeFeed(spark, feedSpec, feedDir, parallelism = 2)
+
+    val table = new SnapshotTable(spark, s"$base/table", numBuckets = 8)
+    val keep = 2
+    val loop = new ReplayLoop(
+      spark,
+      feedDir,
+      table,
+      new StagedStore(spark, s"$base/stage", bucketNanos = feedSpec.nanosStep * 300),
+      s"$base/checkpoint",
+      spec,
+      immediate = true,
+      saltBuckets = 8,
+      maxFilesPerTrigger = 1, // one commit per feed file
+      vacuumKeepVersions = Some(keep),
+      changelogDir = Some(clDir)
+    )
+    loop.runAvailableNow()
+
+    // every commit published its segment before vacuum retired its
+    // predecessor, so the fold starts at version 1 and covers them all
+    val segs = segmentDirs(clDir)
+    assert(segs.size >= 6, s"expected one segment per batch, got ${segs.map(_._1)}")
+    assert(segs.map(_._1) == (1L to segs.size.toLong), s"gaps in ${segs.map(_._1)}")
+    assert(foldSegments(clDir) == tableState(table))
+
+    val commits = Files.list(Paths.get(s"$base/table/commits")).count()
+    assert(commits <= keep, s"$commits commit files after ${segs.size} commits (keep=$keep)")
+    val dataDirs = Files.list(Paths.get(s"$base/table/data")).count()
+    assert(
+      dataDirs <= keep + 1,
+      s"$dataDirs data-version dirs after ${segs.size} commits (keep=$keep)"
+    )
+  }
+
   test("changelog dir hygiene: stale orphaned tmp dirs reclaimed, fresh ones left alone") {
     val base = tmpDir("clhyg")
     val cl = s"$base/changelog"

@@ -400,6 +400,77 @@ class MultiTableLoopSpec extends SparkSpec {
     assert(loop.committedFence == Hlc(125L, 0))
   }
 
+  test("fan path: a topic gaining a column between fences evolves its snapshot, LWW intact") {
+    val base = tmpDir("mtlevo")
+    val feedDir = s"$base/feed"
+    Files.createDirectories(Paths.get(feedDir))
+
+    def mut(topic: String, pk: Int, v: String, ts: Long, stars: Option[Int] = None): String = {
+      val extra = stars.map(n => s""","stars":$n""").getOrElse("")
+      s"""{"after":{"pk":$pk,"v":"$v"$extra},"key":[$pk],"topic":"$topic","updated":"$ts.0000000000"}"""
+    }
+    var mtime = 1000000L
+    def writeFile(name: String, payload: Seq[String], resolved: Long): Unit = {
+      val p = Paths.get(feedDir, name)
+      Files.writeString(
+        p,
+        Seq(
+          s"""{"payload":[${payload.mkString(",")}],"length":${payload.size}}""",
+          s"""{"resolved":"$resolved.0000000000"}"""
+        ).mkString("\n")
+      )
+      Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(mtime))
+      mtime += 1000
+    }
+    // fence 1: the declared columns only
+    writeFile("0001.json", Seq(mut("a", 1, "a1", 10), mut("a", 2, "a2", 11), mut("b", 1, "b1", 12)), 20)
+    // fence 2: topic a's payload gains "stars"
+    writeFile(
+      "0002.json",
+      Seq(mut("a", 1, "a1b", 25, Some(5)), mut("a", 3, "a3", 26, Some(7)), mut("b", 1, "b1b", 27)),
+      30
+    )
+    // fence 3: a row without the new column, a newer evolved row, and a late
+    // row below pk 1's committed HLC that LWW must drop
+    writeFile(
+      "0003.json",
+      Seq(mut("a", 2, "a2b", 35), mut("a", 3, "a3b", 36, Some(9)), mut("a", 1, "late", 21, Some(1))),
+      40
+    )
+
+    val schema = StructType(
+      Seq(StructField("pk", IntegerType), StructField("v", StringType))
+    )
+    def target(name: String) = TableTarget(
+      TableSpec(schema, Seq("pk")),
+      new SnapshotTable(spark, s"$base/$name/table", numBuckets = 4),
+      new StagedStore(spark, s"$base/$name/stage", bucketNanos = 100L)
+    )
+    val targets = Map("a" -> target("a"), "b" -> target("b"))
+    val loop = new MultiTableLoop(
+      spark, feedDir, targets,
+      dependsOn = Map.empty,
+      checkpointDir = s"$base/checkpoint",
+      saltBuckets = 4,
+      maxFilesPerTrigger = 1 // one fence per file
+    )
+    loop.runAvailableNow()
+
+    val a = targets("a").table.read()
+    assert(a.schema.fieldNames.contains("stars"))
+    assert(targets("a").table.payloadSchema().get.fieldNames.contains("stars"))
+    val aRows = a.select($"pk", $"v", $"stars".cast(LongType))
+      .as[(Int, String, Option[Long])].collect().toSet
+    assert(
+      aRows == Set((1, "a1b", Some(5L)), (2, "a2b", None), (3, "a3b", Some(9L))),
+      s"got $aRows"
+    )
+    val b = targets("b").table.read()
+    assert(!b.schema.fieldNames.contains("stars"))
+    assert(b.select("pk", "v").as[(Int, String)].collect().toSet == Set((1, "b1b")))
+    assert(loop.committedFence == Hlc(40L, 0))
+  }
+
   test("appendMultiTopic: one-pass staging, idempotent replays, per-topic drift, seq bumps") {
     val base = tmpDir("amt")
     val t1 = new StagedStore(spark, s"$base/t1", bucketNanos = 100L)
