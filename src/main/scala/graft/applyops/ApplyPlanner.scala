@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.dedup.LastWriterWins
-import graft.model.{SchemaDriftException, TableConfig}
+import graft.model.{SchemaDrift, SchemaDriftException, TableConfig}
 import graft.table.{SchemaEvolution, SnapshotTable}
 
 /** Target-table apply specification: the authoritative payload schema (the
@@ -55,18 +55,6 @@ object ApplyPlanner {
   private def srcName(spec: TableSpec, c: String): String =
     spec.config.sourceNames.getOrElse(c, c)
 
-  /** @param dedup when false, skip the pre-merge LWW dedup (2 shuffles):
-    *   the snapshot merge's per-key max_by reduction subsumes it. Leave true
-    *   when the batch feeds a CAS gate (CAS must see one candidate per key,
-    *   like the reference's dedup-before-apply, apply.go:148-151) or when
-    *   the batch is consumed by anything other than SnapshotTable.merge.
-    */
-  /** @param observedFields when the caller already knows the window's
-    *   payload field set (the staging layer records it per batch while
-    *   writing — StagedStore.append's riding summary), pass it here and the
-    *   planner skips its own summary scan entirely. Key-arity / missing-PK
-    *   validation is then the stager's responsibility.
-    */
   /** Synthetic PK column for tables declared WITHOUT a primary key,
     * mirroring the reference's rowid synthesis
     * (internal/target/schemawatch/coldata.go:147-182): the target schema
@@ -86,6 +74,17 @@ object ApplyPlanner {
     */
   val InferenceSampleRows = 1024
 
+  /** @param dedup when false, skip the pre-merge LWW dedup (2 shuffles):
+    *   the snapshot merge's per-key max_by reduction subsumes it. Leave true
+    *   when the batch feeds a CAS gate (CAS must see one candidate per key,
+    *   like the reference's dedup-before-apply, apply.go:148-151) or when
+    *   the batch is consumed by anything other than SnapshotTable.merge.
+    * @param observedFields when the caller already knows the window's
+    *   payload field set (the staging layer records it per batch while
+    *   writing — StagedStore.append's riding summary), pass it here and the
+    *   planner skips its own summary scan entirely. Key-arity / missing-PK
+    *   validation is then the stager's responsibility.
+    */
   def plan(
       spark: SparkSession,
       specIn: TableSpec,
@@ -111,42 +110,15 @@ object ApplyPlanner {
     val pkSrcNames = spec.pkCols.map(srcName(spec, _))
 
     // ---- drift truth table ----------------------------------------------
-    // one summary pass, unless the field set was already collected while
-    // staging. Avoids materializing payload VALUES either way:
-    // json_object_keys walks the top-level keys without copying KB-sized
-    // contents; the PK probe is a per-column path extraction.
+    // one summary pass (SchemaDrift), unless the field set was already
+    // collected while staging. A synthetic-rowid table accepts any key
+    // shape (0 or 1 values) and never requires the PK in the payload — the
+    // rowid is engine-made
     val fields: Seq[String] = observedFields.getOrElse {
-      val missingPkCond = col("data").isNotNull &&
-        pkSrcNames
-          .map(n => get_json_object(col("data"), s"$$.$n").isNull)
-          .reduce(_ || _)
-      val summaryRow = window
-        .agg(
-          collect_set(size(keyArr)).as("arities"),
-          array_distinct(flatten(collect_set(expr("json_object_keys(data)"))))
-            .as("fields"),
-          max(when(missingPkCond, 1).otherwise(0)).as("missing_pk")
-        )
-        .collect()(0)
-      // a synthetic-rowid table accepts any key shape (0 or 1 values) and
-      // never requires the PK in the payload — the rowid is engine-made
-      if (!syntheticPk) {
-        val arities = summaryRow.getSeq[Int](0)
-        val missingPk = !summaryRow.isNullAt(2) && summaryRow.getInt(2) == 1
-        val expect = spec.pkCols.size
-        arities.find(_ != expect).foreach { got =>
-          throw new SchemaDriftException(
-            s"the mutation key has $got values, expected $expect"
-          )
-        }
-        if (missingPk) {
-          throw new SchemaDriftException(
-            s"missing primary-key column in payload; expected all of " +
-              pkSrcNames.mkString("[", ", ", "]")
-          )
-        }
-      }
-      summaryRow.getSeq[String](1)
+      val rules: Map[Int, SchemaDrift.PkRule] =
+        if (syntheticPk) Map.empty else Map(0 -> (spec.pkCols.size, pkSrcNames))
+      val r = window.select(SchemaDrift.aggregates(lit(0), 1, rules): _*).collect()(0)
+      SchemaDrift.check(r.getValuesMap(r.schema.fieldNames.toSeq), 1, rules, _ => "").head
     }
 
     val knownFields: Set[String] =

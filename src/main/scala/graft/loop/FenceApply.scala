@@ -122,7 +122,21 @@ final class FenceApply(
         // skips it — the winner owns that fence's retire/vacuum, and a
         // loser retiring concurrently races the winner's staging
         // bookkeeping.
-        case e: Throwable if ReplayLoop.isMissingFileRead(e) && fence >= target =>
+        case e: Throwable if fence >= target =>
+          if (!ReplayLoop.isMissingFileRead(e)) {
+            // a covering commit exists but the failure is not a missing-file
+            // read: say what it was before it propagates unchanged
+            val condition = e match {
+              case st: org.apache.spark.SparkThrowable => st.getCondition
+              case _                                   => null
+            }
+            println(
+              s"[graft][$name] merge to fence ${target.format} failed with " +
+                s"${e.getClass.getName} (condition $condition) although a " +
+                "covering commit exists; re-raising"
+            )
+            throw e
+          }
           println(
             s"[graft][$name] fence ${target.format} already applied by a " +
               "concurrent writer (staged files retired mid-read); no-op"

@@ -126,8 +126,8 @@ final class MultiTableLoop(
     }
 
     // stage EVERY table's slice in one Spark job (idempotent per batch):
-    // partitionBy(topic, ts_bucket) + a single per-topic drift aggregation
-    // replaces the T-pass per-topic append loop
+    // partitionBy(topic, ts_bucket), with the per-topic drift summary
+    // riding that write, replaces the T-pass per-topic append loop
     StagedStore.appendMultiTopic(
       batch.muts.select("topic", "key", "data", "nanos", "logical", "src_file"),
       batch.stageKey,

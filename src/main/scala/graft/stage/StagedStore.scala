@@ -1,10 +1,11 @@
 package graft.stage
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.model.Hlc
+import graft.model.{Hlc, SchemaDrift}
+import graft.util.Dirs
 
 /** Durable staging buffer for mutations awaiting their resolved fence.
   *
@@ -26,18 +27,7 @@ final class StagedStore(
     spark: SparkSession,
     val root: String,
     /** HLC nanos per staging partition bucket */
-    val bucketNanos: Long = 3600L * 1000000000L,
-    /** When true, [[append]] repartitions by `(ts_bucket, 4-way key salt)`
-      * before writing — few large files per bucket, at the cost of
-      * shuffling the FULL batch volume once per micro-batch. Default
-      * false: staging is a transient pass-through buffer, and paying a
-      * whole-feed shuffle purely for file-count control is the wrong
-      * trade at 100 TB — per-batch file count is already bounded by
-      * (input splits x ts-buckets-per-batch), readers scan staging with
-      * split-sized tasks regardless of file layout, and retirement drops
-      * whole partition directories either way.
-      */
-    val coalesceAppend: Boolean = false
+    val bucketNanos: Long = 3600L * 1000000000L
 ) {
   import StagedStore._
 
@@ -50,63 +40,45 @@ final class StagedStore(
 
   private def bucketOf(nanos: Long): Long = Math.floorDiv(nanos, bucketNanos)
 
-  /** Write `staged` into a private scratch tree, then ADOPT the part files
-    * into the shared partition layout with driver-side renames (the same
-    * pattern [[StagedStore.appendMultiTopic]] always used).
-    *
-    * Two concurrent appenders writing `mode("append")` into one directory
-    * share the Hadoop committer's `_temporary` tree: the first job's
-    * cleanup deletes the second's in-flight task files, failing it with
-    * TASK_WRITE_FAILED — the write-side face of an HA restart overlap
-    * (two drivers on one staging store). A per-append scratch dir gives
-    * every job a private committer tree; adoption is per-file rename
-    * (part names carry the job UUID, so two appenders can adopt into one
-    * bucket dir without name collisions). A concurrent retire may drop
-    * the target dir between create and move — retried, recreating the
-    * dir; the row is then re-merged from this fresh file or already
-    * covered by the competitor's fence.
+  /** Reclaim `_scratch-*` trees of killed writers: a scratch tree is live
+    * for the duration of one staging job, and 30 min is far past any batch.
     */
-  private def writeAdopt(staged: DataFrame): Unit = {
-    // reclaim orphans of killed writers (a scratch tree is live for the
-    // duration of one append job; 30 min is far past any batch)
-    graft.util.Dirs.listDir(Paths.get(root)).foreach { p =>
+  private def reapScratch(): Unit =
+    Dirs.listDir(Paths.get(root)).foreach { p =>
       if (p.getFileName.toString.startsWith("_scratch-") &&
         Files.getLastModifiedTime(p).toMillis < System.currentTimeMillis() - 30 * 60 * 1000L)
-        rmTree(p)
+        Dirs.deleteRecursively(p)
     }
-    val scratch = Files.createTempDirectory(Paths.get(root), "_scratch-")
-    try {
-      val out = scratch.resolve("out").toString
-      staged.write.mode("overwrite").partitionBy(TS_BUCKET).parquet(out)
-      graft.util.Dirs.listDir(Paths.get(out)).foreach { bucketDir =>
-        val name = bucketDir.getFileName.toString
-        if (name.startsWith(s"$TS_BUCKET=")) {
-          val target = Paths.get(dataDir, name)
-          graft.util.Dirs.listDir(bucketDir).foreach { f =>
-            if (f.getFileName.toString.endsWith(".parquet")) {
-              var tries = 0
-              var done = false
-              while (!done) {
-                try {
-                  Files.createDirectories(target)
-                  Files.move(f, target.resolve(f.getFileName))
-                  done = true
-                } catch {
-                  case _: java.nio.file.NoSuchFileException if tries < 3 =>
-                    tries += 1
-                }
-              }
-            }
-          }
+
+  /** Move the part files of `written` (`ts_bucket=N/part-*.parquet`) into
+    * this store's partition layout with driver-side renames (metadata only).
+    * Part names carry the write job's UUID, so two appenders can adopt into
+    * one bucket dir without name collisions. A concurrent retire may drop
+    * the target dir between create and move — retried, recreating the dir;
+    * the row is then re-merged from this fresh file or already covered by
+    * the competitor's fence.
+    */
+  private def adopt(written: Path): Unit =
+    for {
+      bucketDir <- Dirs.listDir(written)
+      if bucketDir.getFileName.toString.startsWith(s"$TS_BUCKET=")
+      f <- Dirs.listDir(bucketDir)
+      if f.getFileName.toString.endsWith(".parquet")
+    } {
+      val target = Paths.get(dataDir, bucketDir.getFileName.toString)
+      var tries = 0
+      var done = false
+      while (!done) {
+        try {
+          Files.createDirectories(target)
+          Files.move(f, target.resolve(f.getFileName))
+          done = true
+        } catch {
+          case _: java.nio.file.NoSuchFileException if tries < 3 =>
+            tries += 1
         }
       }
-    } finally rmTree(scratch)
-  }
-
-  private def rmTree(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) graft.util.Dirs.listDir(p).foreach(rmTree)
-    Files.deleteIfExists(p)
-  }
+    }
 
   /** Monotone append counter, persisted across restarts. Every successful
     * (non-replayed) [[append]] stamps its rows with the next value; the
@@ -118,114 +90,26 @@ final class StagedStore(
   def currentSeq(): Long =
     if (Files.exists(seqFile)) Files.readString(seqFile).trim.toLong else 0L
 
-  private def nextSeq(): Long = {
-    val n = currentSeq() + 1
-    Files.writeString(seqFile, n.toString)
-    n
-  }
-
   /** Append a batch of parsed mutations
-    * `(key, data, nanos, logical, src_file)`. `batchId` makes replays cheap
-    * no-ops (a marker is written after a successful append); a crash between
-    * append and marker re-appends, which the read-side dedup absorbs.
-    *
-    * When `validatePk` is set, the drift summary — key arities, the distinct
-    * payload field set, PK-presence — rides the SAME scan that writes the
-    * staged files (Observation): no separate summary pass ever touches the
-    * data again. Violations (wrong key arity, missing PK) throw before the
-    * marker is written, so the batch fails exactly once and replays retry
-    * it; the field set is persisted in the marker for merge-time schema
-    * reconciliation (field sets only grow, so the union over markers is the
-    * window's field set).
+    * `(key, data, nanos, logical, src_file)`: the one-store call of
+    * [[StagedStore.appendMultiTopic]]'s staging write, with the same
+    * contract. `batchId` makes replays cheap no-ops (a marker is written
+    * after a successful append). The drift summary rides the write; with
+    * `validatePk = Some((arity, pkPayloadNames))` a wrong key arity or a
+    * missing PK column throws before anything is adopted. Returns false
+    * when the batch was already staged.
     */
   def append(
       mutations: DataFrame,
       batchId: Long,
       validatePk: Option[(Int, Seq[String])] = None
-  ): Boolean = {
-    val marker = markerDir.resolve(s"$batchId")
-    if (Files.exists(marker)) return false
-    val seq = nextSeq()
-    val stamped = mutations
-      .withColumn(SEQ, lit(seq))
-      .withColumn(TS_BUCKET, floor(col("nanos") / bucketNanos))
-    // shuffle-free by default (see `coalesceAppend`): each input task
-    // writes its rows straight into the ts-bucket directories it touches
-    val staged =
-      if (coalesceAppend)
-        stamped.repartition(col(TS_BUCKET), pmod(xxhash64(col("key")), lit(4)))
-      else stamped
-
-    validatePk match {
-      case None =>
-        // no PK validation (e.g. a PK-less spec with a synthetic rowid),
-        // but the payload FIELD SET must still be collected — schema
-        // evolution at merge time reads it from observedFields()
-        val obs = org.apache.spark.sql.Observation(
-          s"stage-$batchId-${java.util.UUID.randomUUID()}"
-        )
-        writeAdopt(
-          staged.observe(
-            obs,
-            array_distinct(flatten(collect_set(expr("json_object_keys(data)"))))
-              .as("fields")
-          )
-        )
-        obs.get.get("fields") match {
-          case Some(f: Seq[_]) => recordFields(f.map(_.toString))
-          case _ => ()
-        }
-        Files.writeString(marker, s"""{"seq":$seq}""")
-      case Some((pkArity, pkSrcNames)) =>
-        // a PK-less spec (synthetic rowid) never validates here, but guard
-        // the empty reduce anyway
-        val missingPkCond =
-          if (pkSrcNames.isEmpty) lit(false)
-          else
-            col("data").isNotNull &&
-              pkSrcNames
-                .map(n => get_json_object(col("data"), s"$$.$n").isNull)
-                .reduce(_ || _)
-        // globally-unique name: Observations match by name on the shared
-        // listener bus, so two sessions staging the same stageKey
-        // concurrently would otherwise read each other's drift metrics
-        val obs = org.apache.spark.sql.Observation(
-          s"stage-$batchId-${java.util.UUID.randomUUID()}"
-        )
-        writeAdopt(
-          staged.observe(
-            obs,
-            collect_set(size(from_json(col("key"), org.apache.spark.sql.types.ArrayType(StringType))))
-              .as("arities"),
-            array_distinct(flatten(collect_set(expr("json_object_keys(data)"))))
-              .as("fields"),
-            max(when(missingPkCond, 1).otherwise(0)).as("missing_pk")
-          )
-        )
-        val m = obs.get
-        val arities = m("arities").asInstanceOf[Seq[Int]]
-        val fields = m("fields").asInstanceOf[Seq[String]]
-        val missingPk =
-          Option(m("missing_pk")).exists(_.asInstanceOf[Number].intValue() == 1)
-        arities.find(_ != pkArity).foreach { got =>
-          throw new graft.model.SchemaDriftException(
-            s"the mutation key has $got values, expected $pkArity"
-          )
-        }
-        if (missingPk) {
-          throw new graft.model.SchemaDriftException(
-            s"missing primary-key column in payload; expected all of " +
-              pkSrcNames.mkString("[", ", ", "]")
-          )
-        }
-        // fold the batch's payload field set into the ONE compacted
-        // `_fields` file BEFORE the marker lands: a crash in between
-        // replays the batch and re-unions (idempotent — sets only grow)
-        recordFields(fields)
-        Files.writeString(marker, s"""{"seq":$seq}""")
-    }
-    true
-  }
+  ): Boolean =
+    stageBatch(
+      mutations.withColumn(TOPIC, lit("")),
+      batchId,
+      Map("" -> this),
+      validatePk.map("" -> _).toMap
+    )
 
   /** Fold `fields` into the compacted field-set file (read-union-write,
     * atomic rename; single writer per store). Keeps [[observedFields]] an
@@ -251,7 +135,7 @@ final class StagedStore(
   private def legacyMarkerFields(): Set[String] = {
     import scala.jdk.CollectionConverters._
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    StagedStore
+    Dirs
       .listDir(markerDir)
       .flatMap { p =>
         val f = mapper.readTree(Files.readString(p)).get("fields")
@@ -320,8 +204,8 @@ final class StagedStore(
     * merge's per-key max_by keeps exactly one of any exact-tie group — so
     * the merge path can skip the dedup entirely. Use [[selectWindow]] when
     * consumers need unique rows.
-    */
-  /** @param stagedAfterSeq when set, rows staged with `stage_seq >` this
+    *
+    * @param stagedAfterSeq when set, rows staged with `stage_seq >` this
     *   value are included even when their ts is at/below `from` — the
     *   late-delivery branch: a transport-reordered mutation below the
     *   committed fence still applies exactly once (it was never merged),
@@ -377,7 +261,7 @@ final class StagedStore(
     * only — no data read). None when nothing is staged.
     */
   def maxStagedBucket(): Option[Long] = {
-    StagedStore
+    Dirs
       .listDir(Paths.get(dataDir))
       .map(_.getFileName.toString)
       .filter(_.startsWith(s"$TS_BUCKET="))
@@ -403,12 +287,12 @@ final class StagedStore(
   def retire(upTo: Hlc, markerKeep: Int = 64): Int = {
     val fenceBucket = bucketOf(upTo.nanos) // drop buckets strictly below
     var dropped = 0
-    StagedStore.listDir(Paths.get(dataDir)).foreach { p =>
+    Dirs.listDir(Paths.get(dataDir)).foreach { p =>
       val name = p.getFileName.toString
       if (name.startsWith(s"$TS_BUCKET=")) {
         val b = name.stripPrefix(s"$TS_BUCKET=").toLong
         if (b < fenceBucket) {
-          deleteRecursively(p)
+          Dirs.deleteRecursively(p)
           dropped += 1
         }
       }
@@ -419,12 +303,12 @@ final class StagedStore(
     // coarse-granularity mtime tick). Legacy seq-less markers sort oldest,
     // then by (mtime, name) for determinism.
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def markerSeq(p: java.nio.file.Path): Long =
+    def markerSeq(p: Path): Long =
       try {
         val n = mapper.readTree(Files.readString(p)).get("seq")
         if (n == null) Long.MinValue else n.asLong(Long.MinValue)
       } catch { case _: Exception => Long.MinValue }
-    val markers = StagedStore
+    val markers = Dirs
       .listDir(markerDir)
       .map(p =>
         (markerSeq(p), Files.getLastModifiedTime(p).toMillis, p.getFileName.toString, p)
@@ -433,148 +317,109 @@ final class StagedStore(
     markers.dropRight(markerKeep).foreach { case (_, _, _, p) => Files.deleteIfExists(p) }
     dropped
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) StagedStore.listDir(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-  }
 }
 
 object StagedStore {
   val TS_BUCKET = "ts_bucket"
   val SEQ = "stage_seq"
 
-  /** Eager, stream-closing directory listing (shared impl: [[graft.util.Dirs]]). */
-  private[graft] def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] =
-    graft.util.Dirs.listDir(p)
+  private val TOPIC = "topic"
+  private val STORE = "__store"
 
-  /** ONE-PASS staging of a multi-topic batch.
-    *
-    * The per-topic `append` loop scans the (cached) batch once per topic —
-    * T passes. This writes every topic's slice in a single Spark job
-    * (`partitionBy(topic, ts_bucket)` into a batch-scoped spill dir), runs
-    * ONE `groupBy(topic)` drift aggregation, then adopts the written files
-    * into each topic's store with driver-side renames (metadata only) and
-    * writes the per-topic markers. Crash between adopt and marker replays
-    * the batch; duplicate rows are byte-identical and collapse in the
-    * read-side dedup / merge max_by, same contract as [[StagedStore.append]].
-    *
-    * `mutations` must carry `(topic, key, data, nanos, logical, src_file)`.
-    * Per-topic seq values are stamped at write time (CASE over topics) and
-    * the stores' counters are bumped after adoption.
+  /** Stage one multi-topic batch into each topic's store — the webhook's
+    * one-transaction staging of all its tables (reference:
+    * internal/source/cdc/webhook.go:117-164) — with the same contract as
+    * [[StagedStore.append]]. `mutations` must carry
+    * `(topic, key, data, nanos, logical, src_file)`; rows of topics not in
+    * `stores` are dropped. `validatePk` holds the topics whose key arity
+    * and PK presence are checked (PK-less topics synthesize a rowid at plan
+    * time); a violation fails the whole batch, naming the topic.
     */
   def appendMultiTopic(
       mutations: DataFrame,
       batchId: Long,
       stores: Map[String, StagedStore],
       validatePk: Map[String, (Int, Seq[String])]
-  ): Unit = {
-    import org.apache.spark.sql.functions._
+  ): Unit = stageBatch(mutations, batchId, stores, validatePk)
+
+  /** The one staging write (the reference's `Store.Stage`,
+    * internal/staging/stage/stage.go:291-388):
+    *   1. stamp each pending store's next seq and ts bucket on its rows;
+    *   2. write the whole batch in ONE shuffle-free job,
+    *      `partitionBy(store, ts_bucket)`, into a private
+    *      `<store root>/_scratch-*` tree, with the per-store drift summary
+    *      ([[SchemaDrift]]) riding the same scan as an Observation;
+    *   3. validate, and only then adopt the part files into each store;
+    *   4. advance each store's seq, fold its field set into `_fields` and
+    *      write its idempotence marker.
+    * A rejected batch therefore leaves no staged row, seq or marker behind.
+    * A crash after adoption replays the batch; its duplicate rows are
+    * byte-identical and collapse in the read-side dedup / merge max_by.
+    *
+    * The private scratch tree exists because two appenders writing
+    * `mode("append")` into one directory share the Hadoop committer's
+    * `_temporary` tree: the first job's cleanup deletes the second's
+    * in-flight task files (TASK_WRITE_FAILED) — the write-side face of an
+    * HA restart overlap (two drivers on one staging store).
+    */
+  private def stageBatch(
+      mutations: DataFrame,
+      batchId: Long,
+      stores: Map[String, StagedStore],
+      validatePk: Map[String, (Int, Seq[String])]
+  ): Boolean = {
     require(stores.nonEmpty)
-    val pending: Map[String, StagedStore] = stores.filter { case (_, st) =>
-      !Files.exists(st.markerDir.resolve(s"$batchId"))
-    }
-    if (pending.isEmpty) return
-    val topics = pending.keys.toSeq.sorted
-    val muts = mutations.filter(col("topic").isin(topics.map(lit): _*))
-
-    // per-topic seq and ts-bucket width, folded into single columns
-    val seqOf: Map[String, Long] =
-      pending.map { case (t, st) => t -> (st.currentSeq() + 1) }
-    val seqCol = topics.foldLeft(lit(0L)) { (acc, t) =>
-      when(col("topic") === t, lit(seqOf(t))).otherwise(acc)
-    }
-    val bucketCol = topics.foldLeft(lit(0L)) { (acc, t) =>
-      when(col("topic") === t, floor(col("nanos") / pending(t).bucketNanos))
-        .otherwise(acc)
-    }
-
-    val spillRoot = Files.createTempDirectory(s"graft-multistage-$batchId")
-    val spillDir = spillRoot.resolve("data").toString
-    val staged = muts
-      .withColumn(SEQ, seqCol)
-      .withColumn(TS_BUCKET, bucketCol)
-      .repartition(col("topic"), col(TS_BUCKET), pmod(xxhash64(col("key")), lit(4)))
-
-    // ONE drift aggregation for every topic (groupBy replaces T Observations)
-    val keyArr = from_json(col("key"), org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType))
-    val missingPkCol = validatePk.foldLeft(lit(false)) { case (acc, (t, (_, names))) =>
-      if (names.isEmpty) acc // PK-less topic: rowid is synthesized at plan time
-      else
-        when(
-          col("topic") === t,
-          col("data").isNotNull &&
-            names.map(n => get_json_object(col("data"), s"$$.$n").isNull).reduce(_ || _)
-        ).otherwise(acc)
-    }
-    val summary = muts
-      .groupBy(col("topic"))
-      .agg(
-        collect_set(size(keyArr)).as("arities"),
-        array_distinct(flatten(collect_set(expr("json_object_keys(data)"))))
-          .as("fields"),
-        max(when(missingPkCol, 1).otherwise(0)).as("missing_pk")
-      )
-      .collect()
-      .map(r =>
-        r.getString(0) -> ((r.getSeq[Int](1), r.getSeq[String](2), !r.isNullAt(3) && r.getInt(3) == 1))
-      )
-      .toMap
-
-    validatePk.foreach { case (t, (arity, names)) =>
-      summary.get(t).foreach { case (arities, _, missing) =>
-        arities.find(_ != arity).foreach { got =>
-          throw new graft.model.SchemaDriftException(
-            s"[$t] the mutation key has $got values, expected $arity"
-          )
-        }
-        if (missing) {
-          throw new graft.model.SchemaDriftException(
-            s"[$t] missing primary-key column in payload; expected all of " +
-              names.mkString("[", ", ", "]")
-          )
-        }
+    val (topics, pending) = stores.toSeq.sortBy(_._1).filterNot { case (_, st) =>
+      Files.exists(st.markerDir.resolve(s"$batchId"))
+    }.unzip
+    if (pending.isEmpty) return false
+    val seqs = pending.map(_.currentSeq() + 1)
+    // each row's store index, then that store's seq and ts bucket, as
+    // CASE columns over the pending stores (constants for one store)
+    def perStore(f: Int => Column): Column =
+      pending.indices.foldLeft(lit(null)) { (acc, i) =>
+        when(col(STORE) === i, f(i)).otherwise(acc)
       }
+    val storeOf = pending.indices.foldLeft(lit(null).cast(IntegerType)) { (acc, i) =>
+      when(col(TOPIC) === topics(i), lit(i)).otherwise(acc)
     }
+    val rules = pending.indices.flatMap(i => validatePk.get(topics(i)).map(i -> _)).toMap
+    // globally-unique name: Observations match by name on the shared
+    // listener bus, so two sessions staging the same batch concurrently
+    // would otherwise read each other's drift metrics
+    val obs = Observation(s"stage-$batchId-${java.util.UUID.randomUUID()}")
+    val drift = SchemaDrift.aggregates(col(STORE), pending.size, rules)
+    val staged = mutations
+      .withColumn(STORE, storeOf)
+      .filter(col(STORE).isNotNull)
+      .drop(TOPIC)
+      .withColumn(SEQ, perStore(i => lit(seqs(i))))
+      .withColumn(TS_BUCKET, perStore(i => floor(col("nanos") / pending(i).bucketNanos)))
+      .observe(obs, drift.head, drift.tail: _*)
 
-    staged
-      .withColumnRenamed("topic", "__topic")
-      .write
-      .mode("overwrite")
-      .partitionBy("__topic", TS_BUCKET) // partition cols stay out of files
-      .parquet(spillDir)
-
-    // adopt: move each topic's ts_bucket part files into its store (driver
-    // renames — no data pass), bump seq, fold the field set into the
-    // compacted `_fields` file, then write the idempotence marker
-    topics.foreach { t =>
-      val st = pending(t)
-      val topicDir = Paths.get(spillDir, s"__topic=$t")
-      listDir(topicDir).foreach { bucketDir =>
-        val name = bucketDir.getFileName.toString // ts_bucket=N
-        if (name.startsWith(s"$TS_BUCKET=")) {
-          val target = Paths.get(st.root, "data", name)
-          Files.createDirectories(target)
-          listDir(bucketDir).foreach { f =>
-            if (f.getFileName.toString.endsWith(".parquet")) {
-              Files.move(f, target.resolve(f.getFileName))
-            }
-          }
-        }
-      }
-      Files.writeString(st.seqFile, seqOf(t).toString)
-      st.recordFields(summary.get(t).map(_._2).getOrElse(Nil))
-      Files.writeString(
-        st.markerDir.resolve(s"$batchId"),
-        s"""{"seq":${seqOf(t)}}"""
-      )
+    pending.foreach(_.reapScratch())
+    val scratch = Files.createTempDirectory(Paths.get(pending.head.root), "_scratch-")
+    val fields =
+      try {
+        val out = scratch.resolve("out")
+        // each input task writes its rows straight into the (store,
+        // ts-bucket) directories it touches: no shuffle
+        staged.write.mode("overwrite").partitionBy(STORE, TS_BUCKET).parquet(out.toString)
+        val fields = SchemaDrift.check(obs.get, pending.size, rules, i => topics(i) match {
+          case "" => "" // the one-store call names no topic
+          case t  => s"[$t] "
+        })
+        pending.indices.foreach(i => pending(i).adopt(out.resolve(s"$STORE=$i")))
+        fields
+      } finally Dirs.deleteRecursively(scratch)
+    pending.indices.foreach { i =>
+      val st = pending(i)
+      Files.writeString(st.seqFile, seqs(i).toString)
+      // fold the field set into `_fields` BEFORE the marker lands: a crash
+      // in between replays the batch and re-unions (sets only grow)
+      st.recordFields(fields(i))
+      Files.writeString(st.markerDir.resolve(s"$batchId"), s"""{"seq":${seqs(i)}}""")
     }
-    // scratch cleanup (only empty partition dirs and _SUCCESS remain)
-    def rm(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).foreach(rm)
-      Files.deleteIfExists(p)
-    }
-    rm(spillRoot)
+    true
   }
 }

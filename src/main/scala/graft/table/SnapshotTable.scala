@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.Hlc
+import graft.util.Dirs
 
 /** Exactly-once, schema-evolving lake table: parquet data files + a JSON
   * commit log with idempotence keys, bucketed by primary-key hash for
@@ -259,7 +260,7 @@ final class SnapshotTable(
     entries
       .filter(_.getFileName.toString.startsWith(".tmp-"))
       .filter(p => java.nio.file.Files.getLastModifiedTime(p).toMillis < staleMs)
-      .foreach(deleteRecursively)
+      .foreach(Dirs.deleteRecursively)
     val emitted: Set[Long] = entries
       .map(_.getFileName.toString)
       .filter(_.startsWith("v"))
@@ -303,9 +304,9 @@ final class SnapshotTable(
           // another emitter published this segment first (same content by
           // construction) — drop ours
           case _: java.nio.file.FileAlreadyExistsException =>
-            deleteRecursively(tmp)
+            Dirs.deleteRecursively(tmp)
           case _: java.nio.file.DirectoryNotEmptyException =>
-            deleteRecursively(tmp)
+            Dirs.deleteRecursively(tmp)
         }
       }
     }
@@ -441,7 +442,7 @@ final class SnapshotTable(
         !referenced.contains(rel) &&
         (everReferenced.contains(rel) || orphanReapable)
       ) {
-        deleteRecursively(d)
+        Dirs.deleteRecursively(d)
         removed += 1
       }
     }
@@ -455,12 +456,6 @@ final class SnapshotTable(
       )
     }
     removed
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p))
-      SnapshotTable.listDir(p).foreach(deleteRecursively)
-    java.nio.file.Files.deleteIfExists(p)
   }
 
   /** Resolved-timestamp ledger view: one row per commit with its fence and
@@ -865,7 +860,7 @@ final class SnapshotTable(
       // this attempt lost the publication race: its (uniquely-suffixed)
       // files can never be referenced by any manifest — remove them
       // eagerly so the loser leaves no orphan behind
-      deleteRecursively(java.nio.file.Paths.get(dataDir))
+      Dirs.deleteRecursively(java.nio.file.Paths.get(dataDir))
       if (log.contains(idempotenceKey)) None
       else {
         // version collision without our key: a concurrent writer with a

@@ -480,13 +480,36 @@ class MultiTableLoopSpec extends SparkSpec {
       "t1" -> ((1, Seq("pk"))),
       "t2" -> ((1, Seq("pk")))
     )
+    // every multi-topic call is mirrored by one `append` per topic into a
+    // twin store: both entry points must leave identical staging state
+    val twins = Map(
+      "t1" -> new StagedStore(spark, s"$base/a1", bucketNanos = 100L),
+      "t2" -> new StagedStore(spark, s"$base/a2", bucketNanos = 1000L)
+    )
+    def stageBoth(df: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
+      StagedStore.appendMultiTopic(df, batchId, stores, validate)
+      twins.foreach { case (t, st) =>
+        st.append(df.filter($"topic" === t).drop("topic"), batchId, validate.get(t))
+      }
+    }
+    def state(st: StagedStore) = (
+      st.readAll().collect().toSet, // every column, ts_bucket and stage_seq included
+      st.observedFields(),
+      st.currentSeq(),
+      graft.util.Dirs.listDir(Paths.get(st.root, "_batch_markers"))
+        .map(p => p.getFileName.toString -> Files.readString(p)).toSet
+    )
+    def assertTwinsMatch(): Unit = twins.foreach { case (t, st) =>
+      assert(state(st) == state(stores(t)), s"append vs appendMultiTopic differ for $t")
+    }
     val muts = Seq(
       ("t1", "[1]", """{"pk":1,"v":"a"}""", 50L, 0, "f"),
       ("t1", "[2]", """{"pk":2,"v":"b"}""", 150L, 0, "f"), // second ts bucket
       ("t2", "[7]", """{"pk":7,"w":9}""", 50L, 0, "f")
     ).toDF("topic", "key", "data", "nanos", "logical", "src_file")
 
-    StagedStore.appendMultiTopic(muts, batchId = 1L, stores, validate)
+    stageBoth(muts, batchId = 1L)
+    assertTwinsMatch()
     // rows landed in the right stores and ts buckets; seq stamped per store
     val r1 = t1.readAll().orderBy("nanos")
     assert(r1.count() == 2)
@@ -499,25 +522,36 @@ class MultiTableLoopSpec extends SparkSpec {
     assert(t2.observedFields() == Set("pk", "w"))
 
     // replay of the same batch id is a no-op (markers)
-    StagedStore.appendMultiTopic(muts, batchId = 1L, stores, validate)
+    stageBoth(muts, batchId = 1L)
+    assertTwinsMatch()
     assert(t1.readAll().count() == 2 && t2.readAll().count() == 1)
     assert(t1.currentSeq() == 1L)
 
     // a second batch bumps seq and appends
     val muts2 = Seq(("t1", "[3]", """{"pk":3,"v":"c"}""", 60L, 0, "f"))
       .toDF("topic", "key", "data", "nanos", "logical", "src_file")
-    StagedStore.appendMultiTopic(muts2, batchId = 2L, stores, validate)
+    stageBoth(muts2, batchId = 2L)
+    assertTwinsMatch()
     assert(t1.currentSeq() == 2L)
     assert(t1.readAll().count() == 3)
     // t2 had no rows in batch 2 but gets its marker (replay-safe) anyway
     assert(t2.readAll().count() == 1)
 
-    // per-topic drift: a missing PK in ONE topic fails the whole batch
-    val bad = Seq(("t2", "[9]", """{"w":1}""", 70L, 0, "f"))
-      .toDF("topic", "key", "data", "nanos", "logical", "src_file")
+    // per-topic drift: a missing PK in ONE topic fails the whole batch,
+    // adopting nothing into any store and leaving no scratch tree behind
+    val before = stores.map { case (t, st) => t -> state(st) }
+    val bad = Seq(
+      ("t1", "[4]", """{"pk":4,"v":"d"}""", 70L, 0, "f"),
+      ("t2", "[9]", """{"w":1}""", 70L, 0, "f")
+    ).toDF("topic", "key", "data", "nanos", "logical", "src_file")
     val e = intercept[graft.model.SchemaDriftException] {
       StagedStore.appendMultiTopic(bad, batchId = 3L, stores, validate)
     }
     assert(e.getMessage.contains("[t2]"))
+    assert(stores.map { case (t, st) => t -> state(st) } == before)
+    stores.values.foreach { st =>
+      assert(!graft.util.Dirs.listDir(Paths.get(st.root))
+        .exists(_.getFileName.toString.startsWith("_scratch-")))
+    }
   }
 }

@@ -72,4 +72,35 @@ class StagedStoreSpec extends SparkSpec {
       "legacy marker fields must fold into _fields on the first write"
     )
   }
+
+  test("a drift-rejected batch stages nothing and never reaches the table") {
+    import org.apache.spark.sql.types._
+    val base = tmpDir("stagedrift")
+    val st = new StagedStore(spark, s"$base/stage", bucketNanos = 100L)
+    val table = new graft.table.SnapshotTable(spark, s"$base/table", numBuckets = 4)
+    def muts(rows: (String, String, Long)*) =
+      rows.map { case (k, d, n) => (k, d, n, 0, "f") }
+        .toDF("key", "data", "nanos", "logical", "src_file")
+
+    // a two-value key on a one-column PK is rejected...
+    val e = intercept[graft.model.SchemaDriftException] {
+      st.append(muts(("[9,9]", """{"pk":9,"v":"bad"}""", 10L)), batchId = 1L,
+        validatePk = Some((1, Seq("pk"))))
+    }
+    assert(e.getMessage.contains("the mutation key has 2 values, expected 1"))
+    // ...before any of its rows is adopted or its seq is taken
+    assert(st.readAll().count() == 0)
+    assert(st.currentSeq() == 0L)
+    assert(!Files.exists(Paths.get(base, "stage", "_batch_markers", "1")))
+
+    // the next good batch and its fence merge the good row only
+    assert(st.append(muts(("[1]", """{"pk":1,"v":"ok"}""", 20L)), batchId = 2L,
+      validatePk = Some((1, Seq("pk")))))
+    assert(st.currentSeq() == 1L)
+    val spec = graft.applyops.TableSpec(
+      StructType(Seq(StructField("pk", LongType), StructField("v", StringType))), Seq("pk"))
+    new graft.loop.FenceApply(spark, table, st, spec, 4, None, None, "drift-spec")
+      .toFence(Hlc(30L, 0), batchId = 2L, lineage = Nil)
+    assert(table.read().select("pk", "v").as[(Long, String)].collect().toSeq == Seq((1L, "ok")))
+  }
 }
